@@ -1,6 +1,6 @@
 package graft.expressions
 
-import graft.functions.MinHashAggregator.mix64
+import graft.functions.SplitMix.mix64
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}

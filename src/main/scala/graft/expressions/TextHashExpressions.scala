@@ -1,6 +1,6 @@
 package graft.expressions
 
-import graft.functions.MinHashAggregator.mix64
+import graft.functions.SplitMix.mix64
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -473,7 +473,7 @@ case class LineRepetitionStats(child: Expression) extends UnaryExpression {
 
 /** k-lane MinHash signature from an array of shingle hashes, per row.
   * Lane i = min over shingles of splitmix64(h + GOLDEN·(i+1)) — identical
-  * lanes to [[graft.functions.MinHashAggregator]]; empty input → all
+  * lanes to the spec's reference `MinHashAggregator`; empty input → all
   * Long.MaxValue sentinel (never matches).
   */
 case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
@@ -510,9 +510,9 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
 }
 
 /** 64-bit SimHash from an array of token hashes (multiset — duplicates
-  * vote repeatedly), per row. Same vote rule as
-  * [[graft.functions.SimHashAggregator]]: bit j of the fingerprint is set
-  * iff Σ tokens (±1 by token-hash bit j) > 0.
+  * vote repeatedly), per row. Same vote rule as the spec's reference
+  * `SimHashAggregator`: bit j of the fingerprint is set iff Σ tokens
+  * (±1 by token-hash bit j) > 0.
   */
 case class SimHash(child: Expression) extends UnaryExpression {
 
@@ -690,7 +690,7 @@ case class SplitMixKey(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.MinHashAggregator.mix64($a * 131071L + $b)")
+      s"graft.functions.SplitMix.mix64($a * 131071L + $b)")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)

@@ -173,7 +173,7 @@ object HyperplaneLsh {
     * (plane, dim) index pair, top 53 bits → unit double.
     */
   @inline def coord(plane: Int, j: Int): Double = {
-    val h = graft.functions.MinHashAggregator.mix64(plane.toLong * 1000003L + j + 0x9E3779B97F4A7C15L)
+    val h = graft.functions.SplitMix.mix64(plane.toLong * 1000003L + j + 0x9E3779B97F4A7C15L)
     ((h >>> 11).toDouble / (1L << 53).toDouble) * 2.0 - 1.0
   }
 }

@@ -10,12 +10,13 @@ import org.apache.spark.sql.types._
 
 /** Geometric mean via log-sum as a [[TypedImperativeAggregate]]
   * (optimization round 19): same buffer and finish semantics as the
-  * [[GeoMean]] Aggregator it replaces in the query path — (Σ log over
+  * `GeoMean` Aggregator it replaces in the query path — (Σ log over
   * positives, positive / zero / negative counts), any negative → NaN,
   * any zero → 0.0, empty → NaN — without the per-row boxed-tuple
-  * round trip through an ExpressionEncoder. [[GeoMean]] stays as the
-  * spec's reference implementation (TextSpec). Null inputs are skipped
-  * (aggregate convention; the declared lane's column is non-null).
+  * round trip through an ExpressionEncoder. `GeoMean` stays in the test
+  * tree as the spec's reference implementation (TextSpec). Null inputs
+  * are skipped (aggregate convention; the declared lane's column is
+  * non-null).
   */
 case class GeoMeanAgg(
     child: Expression,

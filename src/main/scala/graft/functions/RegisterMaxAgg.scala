@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
 
 /** Elementwise-max aggregate over fixed-width `array<int>` register
   * vectors — the HyperBall merge ([[graft.text.HyperBall]]). Same
-  * associative/commutative contract as the r11 `RegisterMaxAggregator`
+  * associative/commutative contract as the r11 udaf it replaced
   * (map-side partial aggregation, ONE register vector per (node,
   * partition) on the shuffle), re-implemented as a
   * [[TypedImperativeAggregate]] for the optimization round: the udaf
@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   * per-element Integer allocation on every row of every round. Here the
   * update reads the Catalyst array directly (`getInt`, no boxing) into
   * the primitive `Array[Int]` buffer; serialize is the raw int array at
-  * exchange boundaries. Measured (ReachAb, one JVM, sf0.1): the three
+  * exchange boundaries. Measured (one-JVM A/B, sf0.1): the three
   * propagation rounds' aggregation time drops ~2×.
   */
 case class RegisterMaxAgg(

@@ -22,12 +22,16 @@ import org.apache.spark.sql.types._
   * current worst), update reads the two child columns unboxed, and
   * serialize is 16k bytes at exchange boundaries.
   *
-  * Ordering and tie-break are IDENTICAL to the udaf it replaces (score
-  * descending, id ascending on equal scores) — the q_topk_per_key oracle
-  * pins it. Output: `array<struct<_1: double, _2: long>>`, the exact
-  * shape the Aggregator's `Seq[(Double, Long)]` encoder produced, so
-  * consumers (`pair._1` / `pair._2`) are untouched. Null inputs (either
-  * column) are skipped, matching aggregate convention.
+  * Ordering is the total order of Spark's `ORDER BY score DESC, id ASC`:
+  * equal scores tie and break to the smaller id, otherwise
+  * `java.lang.Double.compare` decides. So NaN ranks first (NaN ties with
+  * NaN), and -0.0 ties with 0.0. The result is the window's
+  * `row_number() <= k` rows in rank order, whatever the partition
+  * arrival order — the q_topk_per_key oracle pins it. Rows with a null
+  * score or a null id are skipped, matching aggregate convention.
+  * Output: `array<struct<_1: double, _2: long>>`, the exact shape the
+  * former Aggregator's `Seq[(Double, Long)]` encoder produced, so
+  * consumers (`pair._1` / `pair._2`) are untouched.
   */
 case class TopKAgg(
     scoreChild: Expression,
@@ -110,16 +114,17 @@ case class TopKAgg(
 
 object TopKAgg {
   /** Sorted-best-first bounded buffer: parallel primitive arrays,
-    * `size ≤ k`. Ordering: score desc, id asc — `better` is the exact
-    * predicate the udaf used.
+    * `size ≤ k`, kept best-first in the total order above.
     */
   final class Buf(val k: Int) {
     val scores = new Array[Double](k)
     val ids = new Array[Long](k)
     var size = 0
 
-    private def better(s: Double, i: Long, idx: Int): Boolean =
-      s > scores(idx) || (s == scores(idx) && i < ids(idx))
+    private def better(s: Double, i: Long, idx: Int): Boolean = {
+      val c = if (s == scores(idx)) 0 else java.lang.Double.compare(s, scores(idx))
+      c > 0 || (c == 0 && i < ids(idx))
+    }
 
     def insert(s: Double, i: Long): Unit = {
       if (size >= k && !better(s, i, size - 1)) return

@@ -1,17 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Row}
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Top-k rows per key WITHOUT a per-partition total sort.
   *
   * `row_number().over(Window.partitionBy(key).orderBy(ord)) <= k` shuffles
   * EVERY row of every key to one reducer and sorts it — at 100 TB the
   * window sort of the biggest key is the straggler. This operator keeps a
-  * bounded k-element heap per key inside a typed Aggregator, so map-side
+  * bounded k-element buffer per key inside a typed aggregate, so map-side
   * partial aggregation reduces each partition's contribution to ≤ k rows
   * per key BEFORE the shuffle; the exchange then carries ≤ k·partitions
   * rows per key instead of all of them. Same output as the window
@@ -22,60 +19,15 @@ import org.apache.spark.sql.types._
   */
 object TopKPerKey {
 
-  /** (score, payload) pairs kept in a bounded array buffer — retained as
-    * the spec's reference implementation for [[graft.functions.TopKAgg]].
-    */
-  private[graft] final case class HeapAgg(k: Int)
-      extends Aggregator[(Double, Long), Seq[(Double, Long)], Seq[(Double, Long)]] {
-
-    override def zero: Seq[(Double, Long)] = Vector.empty
-
-    private def better(a: (Double, Long), b: (Double, Long)): Boolean =
-      a._1 > b._1 || (a._1 == b._1 && a._2 < b._2) // score desc, id asc
-
-    // buffer invariant: always sorted best-first, length ≤ k. Per-row work
-    // is O(1) for the common case (full buffer, row ranks below the
-    // current worst) and one binary-search insertion otherwise — NOT a
-    // full re-sort per row (10⁹ rows × sort(k) would dominate the very
-    // map-side combine this operator exists to provide).
-    private def insert(buf: Seq[(Double, Long)], v: (Double, Long)): Seq[(Double, Long)] = {
-      if (buf.length >= k && !better(v, buf.last)) buf
-      else {
-        val idx = {
-          var lo = 0
-          var hi = buf.length
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (better(buf(mid), v)) lo = mid + 1 else hi = mid
-          }
-          lo
-        }
-        val grown = buf.patch(idx, Seq(v), 0)
-        if (grown.length > k) grown.take(k) else grown
-      }
-    }
-
-    override def reduce(buf: Seq[(Double, Long)], v: (Double, Long)): Seq[(Double, Long)] = insert(buf, v)
-
-    override def merge(a: Seq[(Double, Long)], b: Seq[(Double, Long)]): Seq[(Double, Long)] = {
-      val merged = (a ++ b).sortBy { case (s, id) => (-s, id) }
-      merged.take(k)
-    }
-
-    override def finish(buf: Seq[(Double, Long)]): Seq[(Double, Long)] = buf // already sorted
-
-    override def bufferEncoder: Encoder[Seq[(Double, Long)]] = ExpressionEncoder[Seq[(Double, Long)]]()
-    override def outputEncoder: Encoder[Seq[(Double, Long)]] = ExpressionEncoder[Seq[(Double, Long)]]()
-  }
-
   /** Top-k (score desc, id asc) per key. Input columns: key (any), score
     * (double), id (long payload / row identifier). Output: key, id, score,
     * rank (1-based).
     *
     * Since optimization round 19 the aggregate is
     * [[graft.functions.TopKAgg]] (TypedImperativeAggregate over primitive
-    * arrays — the RegisterMaxAgg conversion); [[HeapAgg]] stays as the
-    * spec's reference implementation (TopKPerKeySpec asserts equality).
+    * arrays — the RegisterMaxAgg conversion); the udaf `HeapAgg` stays in
+    * the test tree as the spec's reference implementation (TopKAggSpec
+    * asserts equality).
     */
   def topK(df: DataFrame, keyCol: String, scoreCol: String, idCol: String, k: Int): DataFrame = {
     df.select(col(keyCol).as("key"), col(scoreCol).cast("double").as("__score"), col(idCol).cast("long").as("__id"))

@@ -62,13 +62,13 @@ import scala.jdk.CollectionConverters._
   * Each batch converts Arrow vectors DIRECTLY to
   * `InternalRow` (single conversion; `UTF8String`/`ArrayData` values, no
   * external-Row detour — measured 1.27× the r6 double-conversion read,
-  * 1.44 M rows/s on sf0.1 lineitem; `graft.tools.ArrowReadBench`, numbers
-  * in BASELINE.md). COLUMN pruning DOES reach IPC files: `read(spark,
-  * path, columns)` reads only the selected fields' buffer byte ranges
-  * (the record-batch flatbuffer metadata carries every buffer's
-  * offset/length, so unselected columns cost zero body IO, zero
-  * decompression, zero decode — and dictionary batches for unselected
-  * columns are skipped body-unread). FILTER pushdown reaches
+  * 1.44 M rows/s on sf0.1 lineitem, numbers in BASELINE.md; perfbench's
+  * `store_query` scans time this path now). COLUMN pruning DOES reach
+  * IPC files: `read(spark, path, columns)` reads only the selected
+  * fields' buffer byte ranges (the record-batch flatbuffer metadata
+  * carries every buffer's offset/length, so unselected columns cost zero
+  * body IO, zero decompression, zero decode — and dictionary batches for
+  * unselected columns are skipped body-unread). FILTER pushdown reaches
   * ENGINE-WRITTEN files: [[write]] records per-batch min/max/null
   * statistics in the file footer ([[BatchStatsKey]]) and
   * `read(path, columns, filters)` skips batches no filter row can live
@@ -100,10 +100,10 @@ object ArrowIpc {
   private val LegacyBlockKey = "KNIME:basic:usingLz4Block"
 
   /** Local-mode IO diagnostic: total bytes read through
-    * [[HadoopSeekableChannel]] in this JVM. Specs and
-    * [[graft.tools.ArrowReadBench]] use it to PROVE column pruning skips
-    * unselected buffer bytes (meaningful in local mode only, where every
-    * task shares the JVM; on a cluster each executor counts its own).
+    * [[HadoopSeekableChannel]] in this JVM. Specs use it to PROVE column
+    * pruning skips unselected buffer bytes (meaningful in local mode
+    * only, where every task shares the JVM; on a cluster each executor
+    * counts its own).
     */
   private[graft] val bytesReadCounter = new java.util.concurrent.atomic.LongAdder
 
@@ -112,7 +112,7 @@ object ArrowIpc {
     *
     * SINGLE-QUERY assumption: the counter is JVM-global, so the delta
     * attributes every concurrent channel read to `f`. Callers (specs,
-    * ScaleProbe, ArrowReadBench) run one query at a time with no
+    * ScaleProbe) run one query at a time with no
     * background Spark jobs; a parallel test runner would make byte
     * assertions flaky — keep suites that assert on this sequential.
     */

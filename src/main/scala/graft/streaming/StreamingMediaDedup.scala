@@ -73,14 +73,17 @@ object StreamingMediaDedup {
     try {
       val corpusFps = readFingerprints(spark, fpDir, excludeBatch = Some(batchId))
         .getOrElse(emptyFingerprints(spark))
-      val survivors = incrementalFps(corpusFps, batchFps, batch, idCol,
-        maxHamming, bands, minMatches).localCheckpoint(true)
+      val (plan, members) = pinnedIncrementalFps(corpusFps, batchFps, batch, idCol,
+        maxHamming, bands, minMatches)
       try {
-        survivors.write.mode("overwrite").parquet(s"$survivorsDir/batch=$batchId")
-        batchFps
-          .join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi")
-          .write.mode("overwrite").parquet(s"$fpDir/batch=$batchId")
-      } finally graft.Pins.release(survivors) // checkpoint pin — both writes done
+        val survivors = plan.localCheckpoint(true)
+        try {
+          survivors.write.mode("overwrite").parquet(s"$survivorsDir/batch=$batchId")
+          batchFps
+            .join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi")
+            .write.mode("overwrite").parquet(s"$fpDir/batch=$batchId")
+        } finally graft.Pins.release(survivors) // checkpoint pin — both writes done
+      } finally graft.Pins.release(members) // batchGroups' pin — both writes done
     } finally batchFps.unpersist()
   }
 
@@ -100,7 +103,15 @@ object StreamingMediaDedup {
       maxHamming: Int,
       bands: Int,
       minMatches: Int
-  ): DataFrame = {
+  ): DataFrame =
+    pinnedIncrementalFps(corpusFps, batchFps, batch, idCol, maxHamming, bands, minMatches)._1
+
+  /** [[incrementalFps]]'s plan plus the [[batchGroups]] `members` pin it
+    * reads, for a caller that consumes the plan itself and can then
+    * release the pin ([[applyBatch]]).
+    */
+  private def pinnedIncrementalFps(corpusFps: DataFrame, batchFps: DataFrame, batch: DataFrame,
+      idCol: String, maxHamming: Int, bands: Int, minMatches: Int): (DataFrame, DataFrame) = {
     require(maxHamming < bands, s"maxHamming ($maxHamming) must be < bands ($bands) for full recall")
     require(minMatches >= 1, s"minMatches must be >= 1, got $minMatches")
     val keyedC = keyedFps(collapsedCorpus(corpusFps), bands)
@@ -116,7 +127,7 @@ object StreamingMediaDedup {
     val candCB = keyedR.as("b").join(keyedC.as("c"), Seq("slot", "band", "bucket"))
       .select(col("b.id").as("id_b"), col("c.id").as("id_other"), col("slot"),
         col("b.fp").as("fp_b"), col("c.fp").as("fp_o"))
-    survivorsCollapsed(candCB, keyedR, members, batch, idCol, maxHamming, minMatches)
+    (survivorsCollapsed(candCB, keyedR, members, batch, idCol, maxHamming, minMatches), members)
   }
 
   /** Corpus side collapsed to one representative (min id) per distinct
@@ -179,8 +190,9 @@ object StreamingMediaDedup {
     * 2,500 batch videos collapse to 307 distinct vectors and the
     * in-batch LSH self-join drops from 18.2M candidate rows to the rep
     * pairs. `members` rides a checkpoint pin (consumed by three verdict
-    * lanes; released by GC with the returned plan, the family
-    * discipline).
+    * lanes). A caller that returns a plan over it leaves the pin to GC
+    * with that plan, the family discipline; [[applyBatch]] releases it
+    * once both of its writes are done.
     */
   private[graft] def batchGroups(batchFps: DataFrame): (DataFrame, DataFrame) = {
     val vecs = batchFps.groupBy(col("id"))

@@ -41,7 +41,7 @@ object LinkGraph {
     * the iterative lanes run FASTER on 8 cores than 32 at sf0.1 —
     * PERF_r18 scaling 0.55). A pin every [[CheckpointEvery]] iterations
     * bounds plan depth and lineage for large `iters`; the declared lanes
-    * (iters ≤ 3) run as ONE job. One-JVM A/B (PrAb, sf0.1): chained
+    * (iters ≤ 3) run as ONE job. One-JVM A/B (round 19, sf0.1): chained
     * 0.97 s vs per-iteration pins 1.15 s, rank tables bit-identical.
     */
   private val CheckpointEvery = 8
@@ -628,10 +628,10 @@ object LinkGraph {
       // (Dataset.unpersist is a no-op for checkpoints — graft.Pins).
       // Optimization round 18 note: a window-based one-pass star variant
       // (no ls pin, 2 jobs/round) A/B-measured 25-40% SLOWER in one JVM
-      // (CcAb: 1.63 s vs 2.02-2.27 s) — WindowExec's per-round sort costs
+      // (1.63 s vs 2.02-2.27 s) — WindowExec's per-round sort costs
       // more than the hash-agg + broadcast join it replaced. Round 19: a
       // fused smallStar(largeStar(e)) single-checkpoint round also lost
-      // (CcAb2: exchange reuse never fired, largeStar ran twice).
+      // (exchange reuse never fired, largeStar ran twice).
       val ls = largeStar(e).localCheckpoint(true)
       val next = smallStar(ls).localCheckpoint(true)
       graft.Pins.release(ls)
@@ -644,7 +644,7 @@ object LinkGraph {
       // and the count is a near-free job over the just-pinned checkpoint,
       // while isStarSet is a full 2|E| shuffle+aggregation. Probing only
       // count-stable rounds ran the expensive probe ONCE instead of
-      // every round (CcAb2 one-JVM A/B: 2.15 s vs 3.27 s, labels
+      // every round (round-19 one-JVM A/B: 2.15 s vs 3.27 s, labels
       // identical; a count-stable non-fixpoint round just pays one
       // extra probe and keeps looping — exactness is untouched).
       // Already-star inputs run one extra round: the passes are
@@ -734,7 +734,7 @@ object LinkGraph {
     // endpoints have degree ≥ k" via two degree joins) was tried and
     // REVERTED — the degree aggregate is consumed by both join sides and
     // exchange reuse did not fire, so the lane went from 34 to 44 AQE
-    // jobs (LaneStats). The weak-node pin below computes degrees once.
+    // jobs. The weak-node pin below computes degrees once.
     var stable = false
     var rounds = 0
     while (!stable && rounds < maxRounds) {
@@ -933,13 +933,15 @@ object LinkGraph {
     * semi-join would cost).
     */
   private def isStarSet(e: DataFrame): Boolean = {
-    // `e` is always a DISTINCT (hi, lo) set (canonicalization and every
-    // star pass end with .distinct()), so "hi maps to >1 distinct lo" ≡
-    // "hi appears in >1 rows" — a plain row count per hi. The r17 form
-    // counted DISTINCT lo per hi, which planned an Expand + two-phase
-    // aggregation over the 2|E| union every round; sum/min/max is one
-    // codegen hash aggregate (optimization round 18, guide §2.3 — the
-    // convergence probe was costing as much as a star pass).
+    // `e` is always a DISTINCT (hi, lo) set: canonicalization ends with
+    // .distinct(), and the loop probes only smallStar output, which does
+    // too (largeStar output can carry duplicates since round 19 — never
+    // probe it). So "hi maps to >1 distinct lo" ≡ "hi appears in >1
+    // rows" — a plain row count per hi. The r17 form counted DISTINCT lo
+    // per hi, which planned an Expand + two-phase aggregation over the
+    // 2|E| union every round; sum/min/max is one codegen hash aggregate
+    // (optimization round 18, guide §2.3 — the convergence probe was
+    // costing as much as a star pass).
     val sides = e
       .select(col("hi").as("n"), lit(1L).as("__h"))
       .unionAll(e.select(col("lo").as("n"), lit(0L).as("__h")))

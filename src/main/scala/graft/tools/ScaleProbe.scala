@@ -37,11 +37,20 @@ object ScaleProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = Tables.t(spark, sfDir, "documents")
+    def secs[A](f: => A): (A, Double) = {
+      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
+    }
     def timed[A](what: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[probe] $what%-28s ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      val (r, t) = secs(f)
+      System.err.println(f"[probe] $what%-28s $t%.1f s")
       r
+    }
+    // best of two runs, behind a GC fence: a lane that materializes
+    // millions of Row objects (webm_clip's full-index lane) makes the NEXT
+    // lane read 5× slow unless its garbage is collected first
+    def best2[A](f: => A): (A, Double) = {
+      System.gc()
+      val (r, t1) = secs(f); val (_, t2) = secs(f); (r, math.min(t1, t2))
     }
     mode match {
       case "link_edges" =>
@@ -94,9 +103,6 @@ object ScaleProbe {
         // compute-dense pass (fused tokenCount scan) over a ONE-row-group
         // copy of documents vs the same bytes after rewriteForCompute
         import graft.functions.{TextFunctions => T}
-        def secs[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-        }
         val base = java.nio.file.Files.createTempDirectory("graft_layout").toString
         val starved = s"$base/starved"
         val fixed = s"$base/fixed"
@@ -198,9 +204,6 @@ object ScaleProbe {
         val n = emb.count()
         val cut = n * 8 / 10
         val nlist = 64
-        def secs[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-        }
         val base = java.nio.file.Files.createTempDirectory("graft_ivf_scale").toString
         val dir = s"$base/idx"
         val (_, tBuild) = secs {
@@ -240,9 +243,6 @@ object ScaleProbe {
         val emb = Tables.t(spark, sfDir, "embeddings")
         val n = emb.count()
         val nlist = 64
-        def secs[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-        }
         def stats(ix: org.apache.spark.sql.DataFrame): (Long, Long, Double) = {
           val c = ix.groupBy(col("cell")).count()
           val r = c.agg(max(col("count")), count(lit(1)),
@@ -291,9 +291,6 @@ object ScaleProbe {
         val n = emb.count()
         val cut = n / 2
         val nBatches = 40
-        def secs[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-        }
         val baseDir = java.nio.file.Files.createTempDirectory("graft_ann_scale").toString
         val (ixDir, stDir) = (s"$baseDir/index", s"$baseDir/stats")
         StreamingAnnIndex.initialize(emb.where(col("vec_id") < cut),
@@ -353,9 +350,6 @@ object ScaleProbe {
           else Webm.encode(320, 240, 33, samples, keys, samplesPerCluster = 30)
         })
         val base = java.nio.file.Files.createTempDirectory("graft_webm_clip").toString
-        def secs[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-        }
         Seq(true, false).foreach { cues =>
           val dir = s"$base/${if (cues) "cued" else "plain"}"
           spark.range(nVids.toLong).select(col("id").as("doc_id"),
@@ -367,13 +361,6 @@ object ScaleProbe {
         // clip window: 3 s starting at 90% of the video; best-of-2 per
         // lane (the full pass allocates millions of Sample rows and the
         // first run after it reads GC-poisoned — the notes' fresh-JVM rule)
-        def best2[A](f: => A): (A, Double) = {
-          // GC fence: the full-index lane materializes millions of Row
-          // objects; without it the NEXT lane reads 5× slow (the poisoned
-          // -JVM effect from the builder notes, reproduced here)
-          System.gc()
-          val (r, t1) = secs(f); val (_, t2) = secs(f); (r, math.min(t1, t2))
-        }
         val from = (nFrames * 33L * 9) / 10
         val to = from + 3000L
         // clip lanes FIRST — measurement isolation from the heavy lane
@@ -404,20 +391,14 @@ object ScaleProbe {
           when(pmod(col("doc_id"), lit(4)) === 0,
             concat(lit(" 192.168.0."), pmod(col("doc_id"), lit(256)).cast("string")))
             .otherwise(lit("")))
-        def secsP[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-        }
-        def best2P[A](f: => A): (A, Double) = {
-          val (r, t1) = secsP(f); val (_, t2) = secsP(f); (r, math.min(t1, t2))
-        }
-        val (kernelSum, tKernel) = best2P {
+        val (kernelSum, tKernel) = best2 {
           docs.select(sum(length(T.piiRedact(txt))).as("s")).head().getLong(0)
         }
         val regexChain = regexp_replace(regexp_replace(regexp_replace(txt,
           "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}", "[EMAIL]"),
           "\\+[0-9]{1,3}-[0-9]{3}-[0-9]{4}", "[PHONE]"),
           "[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}", "[IP]")
-        val (regexSum, tRegex) = best2P {
+        val (regexSum, tRegex) = best2 {
           docs.select(sum(length(regexChain)).as("s")).head().getLong(0)
         }
         require(kernelSum == regexSum, s"kernel/regex disagree: $kernelSum vs $regexSum")
@@ -433,13 +414,7 @@ object ScaleProbe {
         val terms = vocab ++ vocab.sliding(2).map(_.mkString(" ")).toSeq ++
           Seq("batch batch", "merge line", "the fast", "qu", "stream spark", "row data", "a f")
         val distinctTerms = terms.distinct
-        def secsB[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-        }
-        def best2B[A](f: => A): (A, Double) = {
-          val (r, t1) = secsB(f); val (_, t2) = secsB(f); (r, math.min(t1, t2))
-        }
-        val (acTotal, tAc) = best2B {
+        val (acTotal, tAc) = best2 {
           docs.select(sum(graft.text.Blocklist.totalHits(col("text"), distinctTerms).cast("long")))
             .head().getLong(0)
         }
@@ -449,7 +424,7 @@ object ScaleProbe {
         val naiveCols = distinctTerms.map(tm =>
           ((length(col("text")) - length(expr(s"replace(text, '${tm.replace("'", "''")}', '')")))
             / lit(tm.length)).cast("long"))
-        val (naiveTotal, tNaive) = best2B {
+        val (naiveTotal, tNaive) = best2 {
           docs.select(sum(naiveCols.reduce(_ + _))).head().getLong(0)
         }
         println(s"""{"mode":"blocklist","terms":${distinctTerms.length},""" +
@@ -802,18 +777,12 @@ object ScaleProbe {
           when(pmod(col("doc_id"), lit(5)) === 0, lit("<script>unclosed"))
             .otherwise(lit("")),
           lit("</body></html>"))
-        def secsH[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-        }
-        def best2H[A](f: => A): (A, Double) = {
-          val (r, t1) = secsH(f); val (_, t2) = secsH(f); (r, math.min(t1, t2))
-        }
         // modular hash sum: a plain sum(xxhash64) overflows Long under
         // ANSI; 5e5 rows × 1e9 stays far inside 2^63 (bit-equality proper
         // is the oracle gate's job — this is a cheap cross-check)
         def hsum(c: org.apache.spark.sql.Column) =
           sum(pmod(xxhash64(c), lit(1000000007L)))
-        val (kernelSum, tKernel) = best2H {
+        val (kernelSum, tKernel) = best2 {
           docs.select(hsum(T.htmlToText(markup)).as("s")).head().getLong(0)
         }
         val regexOut =
@@ -827,7 +796,7 @@ object ScaleProbe {
           "&#39;" -> "'", "&nbsp;" -> " ", "&amp;" -> "&")
           .foldLeft(regexOut) { case (c, (f, r)) =>
             org.apache.spark.sql.functions.replace(c, lit(f), lit(r)) }
-        val (regexSum, tRegex) = best2H {
+        val (regexSum, tRegex) = best2 {
           docs.select(hsum(regexDecoded).as("s")).head().getLong(0)
         }
         require(kernelSum == regexSum, s"kernel/regex disagree: $kernelSum vs $regexSum")
@@ -1319,13 +1288,10 @@ object ScaleProbe {
           .map(f => (f.toString, f.length())).toSeq
         require(statuses.size == 64, s"expected 64 files, got ${statuses.size}")
         val thr = statuses.map(_._2).min / 2
-        def secsN[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-        }
         // serial driver loop (what readImpl did before r18)
-        val (_, tSerial) = secsN(statuses.foreach { case (f, _) =>
+        val (_, tSerial) = secs(statuses.foreach { case (f, _) =>
           ArrowIpc.recordBatchBlocks(spark, f) })
-        val (tasks, tJob) = secsN(ArrowIpc.planCompleteTasks(spark, statuses, thr))
+        val (tasks, tJob) = secs(ArrowIpc.planCompleteTasks(spark, statuses, thr))
         require(tasks.count(_._2.isDefined) > 64 || tasks.size >= 64,
           s"plan produced ${tasks.size} tasks")
         System.err.println(f"[probe] 64-file footer plan: serial driver loop " +
@@ -1347,9 +1313,6 @@ object ScaleProbe {
         import graft.sources.ArrowIpc
         val parent = java.nio.file.Files.createTempDirectory("probe_dsv2w")
         cleanupOnExit(parent)
-        def secsW[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-        }
         def contentHash(dir: String): (Long, Long) = {
           val r = ArrowIpc.read(spark, dir)
             .agg(count(lit(1)), bit_xor(xxhash64(col("doc_id"), col("lang"),
@@ -1358,9 +1321,9 @@ object ScaleProbe {
         }
         // interleaved best-of-2 so page-cache warmth doesn't pick a winner
         val runs = (1 to 2).flatMap { i =>
-          val (_, tn) = secsW(ArrowIpc.write(docs, s"$parent/nat$i",
+          val (_, tn) = secs(ArrowIpc.write(docs, s"$parent/nat$i",
             batchRows = 4096, dictColumns = Set("lang", "source")))
-          val (_, td) = secsW(docs.write.format("arrowipc")
+          val (_, td) = secs(docs.write.format("arrowipc")
             .option("dictColumns", "lang,source").option("batchRows", "4096")
             .mode("overwrite").save(s"$parent/v2$i"))
           Seq(("native", tn, s"$parent/nat$i"), ("dsv2", td, s"$parent/v2$i"))

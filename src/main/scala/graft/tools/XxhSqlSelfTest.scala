@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.functions.MinHashAggregator.mix64
+import graft.functions.SplitMix.mix64
 import graft.queries.XxhSql
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.Platform

@@ -1,4 +1,4 @@
-package graft.functions
+package graft
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
@@ -11,6 +11,9 @@ import org.apache.spark.sql.functions.udaf
   * Geometric mean via log-sum: associative + commutative buffer merge, so
   * Spark runs it with map-side partial aggregation — the distributed-
   * correctness template for all custom aggregates in this engine.
+  *
+  * Spec-only reference: the query path runs
+  * [[graft.functions.GeoMeanAgg]], and TextSpec asserts bit-identity.
   */
 object GeoMean extends Aggregator[Double, (Double, Long, Long, Long), Double] {
   // (sum of logs over positives, positive count, zero count, negative count)

@@ -1,4 +1,4 @@
-package graft.functions
+package graft
 
 import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions.udaf
   * Associative + commutative merge ⇒ Spark runs it with map-side partial
   * aggregation: the shuffle carries one k×8-byte signature per document per
   * partition, never shingles.
+  *
+  * Spec-only reference: the engine runs the per-row
+  * [[graft.expressions.MinHashSig]], and TextSpec asserts equal lanes.
   */
 case class MinHashAggregator(k: Int) extends Aggregator[Long, Array[Long], Seq[Long]] {
 
@@ -28,7 +31,7 @@ case class MinHashAggregator(k: Int) extends Aggregator[Long, Array[Long], Seq[L
   override def reduce(buf: Array[Long], h: Long): Array[Long] = {
     var i = 0
     while (i < k) {
-      val v = MinHashAggregator.mix64(h + 0x9E3779B97F4A7C15L * (i + 1))
+      val v = graft.functions.SplitMix.mix64(h + 0x9E3779B97F4A7C15L * (i + 1))
       if (v < buf(i)) buf(i) = v
       i += 1
     }
@@ -51,14 +54,6 @@ case class MinHashAggregator(k: Int) extends Aggregator[Long, Array[Long], Seq[L
 }
 
 object MinHashAggregator {
-  /** splitmix64 finalizer (public domain). */
-  @inline def mix64(x: Long): Long = {
-    var z = x
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
   /** Column form: MinHash signature (array<long> of length k) of the
     * grouped Long hash column.
     */

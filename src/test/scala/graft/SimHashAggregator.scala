@@ -1,4 +1,4 @@
-package graft.functions
+package graft
 
 import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -11,6 +11,9 @@ import org.apache.spark.sql.functions.udaf
   * rationale as [[MinHashAggregator]]: 64 separate sum-aggregate
   * expressions would generate 64 lanes of code, this is one tight loop
   * with associative merge (map-side partial aggregation).
+  *
+  * Spec-only reference: the engine runs the per-row
+  * [[graft.expressions.SimHash]], and TextSpec asserts equal votes.
   */
 case object SimHashAggregator extends Aggregator[Long, Array[Int], Long] {
 

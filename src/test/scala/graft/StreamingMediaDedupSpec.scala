@@ -75,6 +75,17 @@ class StreamingMediaDedupSpec extends SparkSpec {
     assert(replayed == Seq(1L, 2L, 5L, 6L), s"replay changed survivors: $replayed")
   }
 
+  test("applyBatch releases every pin it takes, batchGroups' members included") {
+    val dir = java.nio.file.Files.createTempDirectory("smdedup_pins").toString
+    val batch = Seq((1L, footage(0, 0)), (2L, checker(0)), (3L, footage(0, 3)))
+      .toDF("vid_id", "payload")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    StreamingMediaDedup.applyBatch(batch, 0L, "payload", "vid_id", s"$dir/surv", s"$dir/fps",
+      n = 4, minMatches = 3)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"applyBatch left persistent RDDs $leaked")
+  }
+
   test("degenerate corpus (property): rep collapse bounds candidates to " +
       "collapsed x cluster-size; verdicts identical to the uncollapsed rule") {
     import org.apache.spark.sql.functions._

@@ -106,11 +106,11 @@ class TextSpec extends SparkSpec {
     val aggSig = docs
       .select($"doc_id".as("id"), explode(T.shingleHashes($"text", 3)).as("h"))
       .groupBy($"id")
-      .agg(graft.functions.MinHashAggregator.signature($"h", 16).as("sig"))
+      .agg(MinHashAggregator.signature($"h", 16).as("sig"))
     val aggSim = docs
       .select($"doc_id".as("id"), explode(T.tokenHashes($"text")).as("h"))
       .groupBy($"id")
-      .agg(graft.functions.SimHashAggregator.fingerprint($"h").as("fp"))
+      .agg(SimHashAggregator.fingerprint($"h").as("fp"))
     // per-row fused path
     val rowSig = docs.select($"doc_id".as("id"),
       H.minHashSigFromHashes(T.shingleHashes($"text", 3), 16).as("sig"))
@@ -163,7 +163,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("geomean: zero input zeroes the mean, negative input is NaN (review r2)") {
-    import graft.functions.{GeoMean, GeoMeanAgg}
+    import graft.functions.GeoMeanAgg
     // both implementations: the Aggregator reference and the
     // TypedImperativeAggregate the query path runs since r19
     for (gm <- Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](

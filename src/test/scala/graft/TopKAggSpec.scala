@@ -27,7 +27,7 @@ class TopKAggSpec extends SparkSpec {
           .select(col("key"), col("score").cast("double").as("__score"),
             col("id").cast("long").as("__id"))
           .groupBy(col("key"))
-          .agg(udaf(TopKPerKey.HeapAgg(k)).apply(col("__score"), col("__id")).as("top"))
+          .agg(udaf(HeapAgg(k)).apply(col("__score"), col("__id")).as("top"))
           .select(col("key"), posexplode(col("top")).as(Seq("rank0", "pair")))
           .select(col("key"), col("pair._2").as("id"), col("pair._1").as("score"),
             (col("rank0") + 1).cast("long").as("rank"))
@@ -35,6 +35,29 @@ class TopKAggSpec extends SparkSpec {
           .sortBy(t => (t._1, t._4))
         assert(got.toSeq == ref.toSeq, s"seed $seed k $k: TopKAgg diverged from HeapAgg")
       }
+    }
+  }
+
+  test("TopKAgg: NaN, signed-zero and null scores rank as the row_number() window does") {
+    import org.apache.spark.sql.expressions.Window
+    val nan = Double.NaN
+    // NaN mid-buffer broke the old `>`/`==` order, and a full [1.0, NaN]
+    // buffer rejected every later score; null scores and ids are skipped
+    val rows = Seq[(String, java.lang.Double, java.lang.Long)](
+      ("a", 1.0, 1L), ("a", nan, 2L), ("a", 0.5, 3L), ("a", 2.0, 4L),
+      ("b", nan, 9L), ("b", 1.0, 5L), ("b", nan, 2L), ("b", 3.0, 7L),
+      ("c", -0.0, 5L), ("c", 0.0, 3L), ("c", null, 0L), ("c", -0.0, 1L),
+      ("c", 0.0, null), ("c", -1.0, 8L))
+    val df = rows.toDF("key", "score", "id")
+    def bits(rs: Array[org.apache.spark.sql.Row]) = rs.map(r => (r.getString(0), r.getLong(1),
+      java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getLong(3))).sortBy(t => (t._1, t._4)).toSeq
+    for (k <- Seq(1, 2, 4); in <- Seq(df.coalesce(1), df.repartition(3))) {
+      val got = bits(TopKPerKey.topK(in, "key", "score", "id", k).collect())
+      val want = bits(df.where(col("score").isNotNull && col("id").isNotNull)
+        .withColumn("rank", row_number().over(
+          Window.partitionBy("key").orderBy(col("score").desc, col("id").asc)).cast("long"))
+        .where(col("rank") <= k).select("key", "id", "score", "rank").collect())
+      assert(got == want, s"k $k")
     }
   }
 

@@ -18,7 +18,8 @@ import org.apache.spark.sql.types._
   * boilerplate-hub group would materialize an unbounded id list in one
   * aggregation buffer.
   *
-  * Contract consumed by [[graft.text.LinkGraph.sharedSpanEdges]]: with
+  * Contract consumed by [[graft.text.LinkGraph.sharedSpanEdges]] and by
+  * the nominal domains of [[graft.table.Domains]]: with
   * `cap = maxDf + 1`, a returned array of size ≤ maxDf is the COMPLETE
   * distinct set (the cap was never hit), while size == cap means the
   * true distinct count is ≥ cap — i.e. the group is over the df cap and
@@ -31,6 +32,9 @@ import org.apache.spark.sql.types._
   * Same [[TypedImperativeAggregate]] shape as [[KllQuantileAgg]]: the
   * buffer is the live object, bytes only materialize at exchange
   * boundaries (serialize = one UnsafeProjection of the value array).
+  * The cached ordering and projection are `@transient`: as an observed
+  * metric of a write job the aggregate travels back to the driver inside
+  * the task result, and generated projections do not serialize.
   */
 case class BoundedSetAgg(
     child: Expression,
@@ -72,12 +76,12 @@ case class BoundedSetAgg(
     buf
   }
 
-  private lazy val ordering = TypeUtils.getInterpretedOrdering(child.dataType)
+  @transient private lazy val ordering = TypeUtils.getInterpretedOrdering(child.dataType)
 
   override def eval(buf: mutable.HashSet[Any]): Any =
     new GenericArrayData(buf.toArray.sorted(ordering))
 
-  private lazy val projection =
+  @transient private lazy val projection =
     UnsafeProjection.create(Array[DataType](ArrayType(child.dataType, containsNull = false)))
 
   override def serialize(buf: mutable.HashSet[Any]): Array[Byte] =

@@ -1,11 +1,12 @@
 package graft.table
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Per-column domain/statistics computation — the reference's only
-  * aggregation machinery, rebuilt as one Spark aggregation job.
+  * aggregation machinery, rebuilt as one set of Spark aggregate
+  * expressions.
   *
   * Reference semantics (org.knime.core.data.columnar/.../domain/):
   *  - numeric min/max ignoring nulls (ColumnarDoubleDomainCalculator.java:68-96,
@@ -19,16 +20,17 @@ import org.apache.spark.sql.types._
   *    (DomainWritable.java:90-137).
   *
   * Spark design: the whole per-batch async pipeline collapses into ONE
-  * aggregation with partial (map-side) combine — every statistic below is a
-  * single-pass agg expression, so a domain pass over 100 TB is one scan with
-  * no shuffle beyond the final 1-row reduce. The capped nominal domain uses
-  * a size-bounded collect_set: `slice(sort_array(collect_set), 1, cap+1)`
-  * would lose the drop signal, so we keep cap+1 values and null the domain
-  * out when it overflows — same observable semantics as the reference's
-  * drop-on-overflow, but in a distributed-safe expression. (collect_set's
-  * intermediate state is bounded per group by the true distinct count;
-  * callers with adversarial cardinality should first gate with
-  * approx_count_distinct, which we expose too.)
+  * bundle of single-pass aggregate expressions with partial (map-side)
+  * combine. Writers evaluate the bundle as observed metrics of the write
+  * job itself ([[observe]], the DomainWritable analog: statistics
+  * computed while the batch is written, no second scan); other callers
+  * run it as a one-job aggregation ([[computeWithRowCount]]). Both decode
+  * through the same function. Observed metrics travel to the driver
+  * inside each task's result, so every per-column state is bounded: the
+  * capped nominal domain is [[graft.functions.BoundedSetAgg]] holding at
+  * most cap+1 values, where a set that reached cap+1 is dropped on decode
+  * (the reference's drop-on-overflow); distinct counts come from one
+  * fixed-size HLL sketch per column.
   */
 object Domains {
 
@@ -42,10 +44,15 @@ object Domains {
       nominal: Option[Seq[Any]],
       nullCount: Long,
       approxDistinct: Long,
-      /** Mergeable HLL sketch bytes (DataSketches, via `hll_sketch_agg`)
-        * for int/long/string/binary columns — the artifact that makes
-        * distinct counts EXACTLY mergeable across ingests ([[merge]]);
-        * None for types `hll_sketch_agg` doesn't take.
+      /** Mergeable HLL sketch bytes (DataSketches, via `hll_sketch_agg`,
+        * lgK 12) — the artifact that makes distinct counts EXACTLY
+        * mergeable across ingests ([[merge]]); `approxDistinct` is its
+        * rounded estimate. Int/long/string/binary columns sketch their
+        * values (`hll_sketch_agg(c)`); every other hashable leaf sketches
+        * `xxhash64(c)` over its non-null values only, so an outside
+        * sketch unions with it only if built the same way. None for
+        * map-containing leaves and for the other non-value-sketched
+        * leaves of sidecars written before those were sketched.
         */
       distinctSketch: Option[Array[Byte]] = None,
       /** Mergeable KLL quantile sketch bytes
@@ -63,7 +70,11 @@ object Domains {
       quantileSketch.flatMap(graft.functions.KllQuantileAgg.quantile(_, q))
   }
 
-  private def sketchable(dt: DataType): Boolean = dt match {
+  /** Types `hll_sketch_agg` takes natively. Their sketches are built from
+    * the values themselves, as in sidecars written before other types
+    * were sketched, so old and new sketches still union.
+    */
+  private def nativelySketched(dt: DataType): Boolean = dt match {
     case IntegerType | LongType | StringType | BinaryType => true
     case _                                                => false
   }
@@ -87,9 +98,8 @@ object Domains {
     case _                        => false
   }
 
-  /** `approx_count_distinct` hashes the value — defined for atomics,
-    * arrays and structs, but NOT for anything containing a map (maps
-    * are unhashable/unorderable in Spark).
+  /** `xxhash64` is defined for atomics, arrays and structs, but NOT for
+    * anything containing a map (maps are unhashable/unorderable in Spark).
     */
   private def hashable(dt: DataType): Boolean = dt match {
     case _: MapType          => false
@@ -127,9 +137,11 @@ object Domains {
   private def leafExprs(l: Leaf, nominalCap: Int): Seq[Column] = {
     val c = l.c
     val base = Seq(count(when(c.isNull, 1)).as(s"${l.key}__nulls")) ++
-      (if (hashable(l.dataType)) Seq(approx_count_distinct(c).as(s"${l.key}__approx_distinct"))
+      (if (nativelySketched(l.dataType)) Seq(hll_sketch_agg(c).as(s"${l.key}__hll"))
+       // keep the `when`: xxhash64(null) is the seed, not null, so nulls
+       // would count as one more distinct value
+       else if (hashable(l.dataType)) Seq(hll_sketch_agg(when(c.isNotNull, xxhash64(c))).as(s"${l.key}__hll"))
        else Seq.empty) ++
-      (if (sketchable(l.dataType)) Seq(hll_sketch_agg(c).as(s"${l.key}__hll")) else Seq.empty) ++
       (if (l.dataType.isInstanceOf[NumericType])
          Seq(graft.functions.KllQuantileAgg.kllSketch(c).as(s"${l.key}__kll"))
        else Seq.empty)
@@ -143,12 +155,53 @@ object Domains {
       else Seq.empty
     val nominal =
       if (isNominal(l.dataType))
-        // keep cap+1 values so overflow is detectable, then drop (null) the
-        // domain — reference drop-when-exceeded semantics.
-        Seq(slice(sort_array(collect_set(c)), 1, nominalCap + 1).as(s"${l.key}__nominal"))
+        // cap + 1 keeps the overflow visible: a full set means dropped
+        Seq(graft.functions.BoundedSetAgg.boundedDistinctSet(c, nominalCap + 1).as(s"${l.key}__nominal"))
       else Seq.empty
     base ++ bounds ++ nominal
   }
+
+  private val RowCountKey = "__graft_rowcount"
+
+  /** The whole bundle for `schema`: every leaf's aggregates plus the row
+    * count, named for [[decode]].
+    */
+  private def aggregates(schema: StructType, nominalCap: Int): Seq[Column] =
+    leaves(schema).flatMap(leafExprs(_, nominalCap)) :+ count(lit(1)).as(RowCountKey)
+
+  /** Domains and row count from one evaluated [[aggregates]] row. */
+  private def decode(schema: StructType, nominalCap: Int, row: Row): (Seq[ColumnDomain], Long) = {
+    def get(n: String): Option[Any] = {
+      val i = row.fieldIndex(n)
+      if (row.isNullAt(i)) None else Some(row.get(i))
+    }
+    leaves(schema).map { l =>
+      val sketch =
+        if (hashable(l.dataType)) get(s"${l.key}__hll").map(_.asInstanceOf[Array[Byte]]) else None
+      ColumnDomain(
+        column = l.path,
+        dataType = l.dataType,
+        min = if (isBounded(l.dataType) || isNumericArray(l.dataType)) get(s"${l.key}__min") else None,
+        max = if (isBounded(l.dataType) || isNumericArray(l.dataType)) get(s"${l.key}__max") else None,
+        // more than the cap's distinct values: dropped
+        nominal =
+          if (isNominal(l.dataType))
+            get(s"${l.key}__nominal")
+              .map(_.asInstanceOf[scala.collection.Seq[Any]].toSeq)
+              .filter(_.length <= nominalCap)
+          else None,
+        nullCount = get(s"${l.key}__nulls").map(_.asInstanceOf[Long]).getOrElse(0L),
+        approxDistinct = sketch.map(estimate).getOrElse(0L),
+        distinctSketch = sketch,
+        quantileSketch =
+          if (l.dataType.isInstanceOf[NumericType]) get(s"${l.key}__kll").map(_.asInstanceOf[Array[Byte]])
+          else None
+      )
+    } -> row.getLong(row.fieldIndex(RowCountKey))
+  }
+
+  private def estimate(sketch: Array[Byte]): Long =
+    math.round(org.apache.datasketches.hll.HllSketch.heapify(sketch).getEstimate)
 
   /** Compute all column domains in a single aggregation job. Nested
     * structs contribute one [[ColumnDomain]] per field (dotted path,
@@ -158,44 +211,27 @@ object Domains {
     computeWithRowCount(df, nominalCap)._1
 
   /** [[compute]] plus the table row count from the SAME single
-    * aggregation — writers need both and must not pay a second scan.
+    * aggregation — for callers that are not writing `df` (a rescan of a
+    * stored table); writers use [[observe]] and pay no extra job.
     */
   def computeWithRowCount(df: DataFrame, nominalCap: Int = DefaultNominalCap): (Seq[ColumnDomain], Long) = {
-    val ls = leaves(df.schema)
-    val exprs = ls.flatMap(leafExprs(_, nominalCap)) :+
-      count(lit(1)).as("__graft_rowcount")
-    val row: Row = df.agg(exprs.head, exprs.tail: _*).head()
-    val rowCount = row.getLong(row.fieldIndex("__graft_rowcount"))
-    def get(n: String): Option[Any] = {
-      val i = row.fieldIndex(n)
-      if (row.isNullAt(i)) None else Some(row.get(i))
-    }
-    ls.map { l =>
-      val nominal: Option[Seq[Any]] =
-        if (isNominal(l.dataType))
-          get(s"${l.key}__nominal")
-            .map(_.asInstanceOf[scala.collection.Seq[Any]].toSeq)
-            .filter(_.length <= nominalCap)
-        else None
-      ColumnDomain(
-        column = l.path,
-        dataType = l.dataType,
-        min = if (isBounded(l.dataType) || isNumericArray(l.dataType)) get(s"${l.key}__min") else None,
-        max = if (isBounded(l.dataType) || isNumericArray(l.dataType)) get(s"${l.key}__max") else None,
-        nominal = nominal,
-        nullCount = get(s"${l.key}__nulls").map(_.asInstanceOf[Long]).getOrElse(0L),
-        approxDistinct =
-          if (hashable(l.dataType))
-            get(s"${l.key}__approx_distinct").map(_.asInstanceOf[Long]).getOrElse(0L)
-          else 0L,
-        distinctSketch =
-          if (sketchable(l.dataType)) get(s"${l.key}__hll").map(_.asInstanceOf[Array[Byte]])
-          else None,
-        quantileSketch =
-          if (l.dataType.isInstanceOf[NumericType]) get(s"${l.key}__kll").map(_.asInstanceOf[Array[Byte]])
-          else None
-      )
-    } -> rowCount
+    val exprs = aggregates(df.schema, nominalCap)
+    decode(df.schema, nominalCap, df.agg(exprs.head, exprs.tail: _*).head())
+  }
+
+  /** Attach the domain bundle to `df` as observed metrics. Returns the
+    * frame to run the write on, and a function that, once that write
+    * has run, gives what [[computeWithRowCount]] would give for `df` —
+    * from the write job itself, without a second scan. Called before a
+    * query over the returned frame has run, the function blocks: the
+    * observation completes only with a query.
+    */
+  def observe(df: DataFrame, nominalCap: Int = DefaultNominalCap): (DataFrame, () => (Seq[ColumnDomain], Long)) = {
+    val obs = Observation()
+    val exprs = aggregates(df.schema, nominalCap)
+    // the row behind `obs.get`'s map; `get` waits without a bound too
+    (df.observe(obs, exprs.head, exprs.tail: _*),
+      () => decode(df.schema, nominalCap, scala.concurrent.Await.result(obs.future, scala.concurrent.duration.Duration.Inf)))
   }
 
   /** Merge two domain snapshots — the incremental-update path (reference
@@ -207,8 +243,10 @@ object Domains {
     * the reference's drop-on-overflow). `approxDistinct` merges through
     * the HLL sketch union when both sides carry one (`distinctSketch`,
     * DataSketches — union of sketches ≡ sketch of union, so the merged
-    * estimate equals a full recompute's); for non-sketchable types it
-    * falls back to max(a, b), a lower bound.
+    * estimate equals a full recompute's). Without two sketches it falls
+    * back to max(a, b), a lower bound: map-containing leaves, and leaves
+    * other than int/long/string/binary read from sidecars written before
+    * those were sketched.
     */
   def merge(a: Seq[ColumnDomain], b: Seq[ColumnDomain], nominalCap: Int = DefaultNominalCap): Seq[ColumnDomain] = {
     // simpleString, not DataType equality: snapshots read back from a

@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *  - Parquet provides the columnar layout, dictionary encoding,
   *    compression, and footer statistics (the Arrow-file + LZ4 + batch-offset
   *    footer roles).
-  *  - Per-column domains AND the row count come from one aggregation over
-  *    the source (the DomainWritable analog) — the written output is
-  *    never re-read.
+  *  - Per-column domains AND the row count are observed metrics of the
+  *    write job itself (the DomainWritable analog, [[Domains.observe]]) —
+  *    the source is scanned once and the written output is never re-read.
   *  - RowID uniqueness is checked distributed (the DuplicateCheckWritable
   *    analog) — one aggregation, fails fast before publishing.
   *  - Domains/statistics are persisted as a JSON sidecar next to the data
@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   *    ColumnarRowContainer / AbstractColumnarContainerTable).
   *
   * At 100 TB: the write is embarrassingly parallel per partition; the only
-  * coordination is the domain aggregation's final reduce and the optional
-  * dup-check shuffle on the RowID (uniform key).
+  * coordination is the driver-side merge of each task's bounded domain
+  * state and the optional dup-check shuffle on the RowID (uniform key).
   */
 object TableWriter {
 
@@ -36,8 +36,8 @@ object TableWriter {
   )
 
   /** Write `df` as the canonical store format with write-time statistics.
-    * Two scans of the SOURCE total — the parquet write and the single
-    * domains+row-count aggregation — and none of the written output.
+    * One scan of the SOURCE: the parquet write job carries the domains
+    * and the row count as observed metrics, and nothing is re-read.
     *
     * @param checkRowIdUnique when true, fails (IllegalArgumentException)
     *   if the RowID column contains duplicates — reference
@@ -57,8 +57,9 @@ object TableWriter {
         s"checkRowIdUnique: no ${RowId.RowIdCol} column to check — add one (RowId.ensureRowId) first")
       RowId.assertUniqueRowIds(df)
     }
-    df.write.mode("overwrite").parquet(path)
-    val (domains, rowCount) = Domains.computeWithRowCount(df, nominalCap)
+    val (observed, domainsOf) = Domains.observe(df, nominalCap)
+    observed.write.mode("overwrite").parquet(path)
+    val (domains, rowCount) = domainsOf()
     persistDomains(df.sparkSession, path, rowCount, domains)
     WriteResult(path, rowCount, domains)
   }
@@ -134,8 +135,14 @@ object TableWriter {
   }
 
   /** Deserialize the per-column HLL sketches from a table's sidecar:
-    * column → sketch bytes (absent for non-sketchable columns / old
-    * sidecars). Regex-scoped parse of the sidecar's own writer format.
+    * column → sketch bytes. Int, long, string and binary columns are
+    * sketched by value (`hll_sketch_agg(c)`); every other hashable column
+    * by `xxhash64(c)` with nulls excluded, so a sketch built elsewhere
+    * unions with these only if it was built the same way (see
+    * [[Domains.ColumnDomain.distinctSketch]]). Absent for map-containing
+    * columns and for the non-value-sketched columns of sidecars written
+    * before those carried sketches. Regex-scoped parse of the sidecar's
+    * own writer format.
     */
   def readDistinctSketches(spark: SparkSession, path: String): Map[String, Array[Byte]] =
     readDomainsJson(spark, path) match {
@@ -158,50 +165,75 @@ object TableWriter {
     * treat None as "recompute", never as "merge blind".
     */
   def readDomains(spark: SparkSession, path: String): Option[(Long, Seq[Domains.ColumnDomain])] =
+    readSidecar(spark, path).flatMap(_.domains)
+
+  /** One parse of the sidecar: the recorded domains (see [[readDomains]])
+    * and the data fingerprint recorded at persist time — None for
+    * sidecars written before fingerprints existed (treated as stale:
+    * recompute is always correct).
+    */
+  private final case class Sidecar(
+      domains: Option[(Long, Seq[Domains.ColumnDomain])],
+      fingerprint: Option[(Long, Long)])
+
+  /** None when the sidecar is absent or not a JSON object. */
+  private def readSidecar(spark: SparkSession, path: String): Option[Sidecar] =
     readDomainsJson(spark, path).flatMap { json =>
-      try {
-        val root = domainsMapper.readTree(json)
-        if (root == null || !root.isObject || !root.has("row_count")) return None
-        val rowCount = root.get("row_count").longValue()
-        import scala.jdk.CollectionConverters._
-        import org.apache.spark.sql.types._
-        def convert(dt: DataType, v: com.fasterxml.jackson.databind.JsonNode): Any = dt match {
-          case IntegerType => v.intValue()
-          case LongType => v.longValue()
-          case ShortType => v.shortValue()
-          case ByteType => v.numberValue().byteValue()
-          case DoubleType => v.doubleValue()
-          case FloatType => v.floatValue()
-          case _: DecimalType => new java.math.BigDecimal(v.asText())
-          case BooleanType => v.booleanValue()
-          case StringType => v.asText()
-          case DateType => java.sql.Date.valueOf(v.asText())
-          case TimestampType => java.sql.Timestamp.valueOf(v.asText())
-          // numeric-array leaves carry ELEMENT-typed bounds
-          case ArrayType(e: NumericType, _) => convert(e, v)
-          case other => throw new IllegalArgumentException(s"unmergeable type $other")
-        }
-        val cols = root.get("columns").elements().asScala.map { c =>
-          val dt = DataType.fromDDL(c.get("type").asText())
-          def opt(f: String): Option[com.fasterxml.jackson.databind.JsonNode] =
-            Option(c.get(f)).filterNot(_.isNull)
-          Domains.ColumnDomain(
-            column = c.get("column").asText(),
-            dataType = dt,
-            min = opt("min").map(convert(dt, _)),
-            max = opt("max").map(convert(dt, _)),
-            nominal = opt("nominal").map(_.elements().asScala.map(n =>
-              if (n.isBoolean) Boolean.box(n.booleanValue()) else (n.asText(): Any)).toSeq),
-            nullCount = c.get("null_count").longValue(),
-            approxDistinct = c.get("approx_distinct").longValue(),
-            distinctSketch = opt("distinct_sketch")
-              .map(n => java.util.Base64.getDecoder.decode(n.asText())),
-            quantileSketch = opt("quantile_sketch")
-              .map(n => java.util.Base64.getDecoder.decode(n.asText())))
-        }.toSeq
-        Some((rowCount, cols))
-      } catch { case scala.util.control.NonFatal(_) => None }
+      val root =
+        try domainsMapper.readTree(json)
+        catch { case scala.util.control.NonFatal(_) => null }
+      if (root == null || !root.isObject) None
+      else {
+        val fingerprint =
+          if (root.has("data_files") && root.has("data_bytes"))
+            Some((root.get("data_files").longValue(), root.get("data_bytes").longValue()))
+          else None
+        Some(Sidecar(parseDomains(root), fingerprint))
+      }
     }
+
+  private def parseDomains(root: com.fasterxml.jackson.databind.JsonNode): Option[(Long, Seq[Domains.ColumnDomain])] =
+    try {
+      if (!root.has("row_count")) return None
+      val rowCount = root.get("row_count").longValue()
+      import scala.jdk.CollectionConverters._
+      import org.apache.spark.sql.types._
+      def convert(dt: DataType, v: com.fasterxml.jackson.databind.JsonNode): Any = dt match {
+        case IntegerType => v.intValue()
+        case LongType => v.longValue()
+        case ShortType => v.shortValue()
+        case ByteType => v.numberValue().byteValue()
+        case DoubleType => v.doubleValue()
+        case FloatType => v.floatValue()
+        case _: DecimalType => new java.math.BigDecimal(v.asText())
+        case BooleanType => v.booleanValue()
+        case StringType => v.asText()
+        case DateType => java.sql.Date.valueOf(v.asText())
+        case TimestampType => java.sql.Timestamp.valueOf(v.asText())
+        // numeric-array leaves carry ELEMENT-typed bounds
+        case ArrayType(e: NumericType, _) => convert(e, v)
+        case other => throw new IllegalArgumentException(s"unmergeable type $other")
+      }
+      val cols = root.get("columns").elements().asScala.map { c =>
+        val dt = DataType.fromDDL(c.get("type").asText())
+        def opt(f: String): Option[com.fasterxml.jackson.databind.JsonNode] =
+          Option(c.get(f)).filterNot(_.isNull)
+        Domains.ColumnDomain(
+          column = c.get("column").asText(),
+          dataType = dt,
+          min = opt("min").map(convert(dt, _)),
+          max = opt("max").map(convert(dt, _)),
+          nominal = opt("nominal").map(_.elements().asScala.map(n =>
+            if (n.isBoolean) Boolean.box(n.booleanValue()) else (n.asText(): Any)).toSeq),
+          nullCount = c.get("null_count").longValue(),
+          approxDistinct = c.get("approx_distinct").longValue(),
+          distinctSketch = opt("distinct_sketch")
+            .map(n => java.util.Base64.getDecoder.decode(n.asText())),
+          quantileSketch = opt("quantile_sketch")
+            .map(n => java.util.Base64.getDecoder.decode(n.asText())))
+      }.toSeq
+      Some((rowCount, cols))
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   private lazy val domainsMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
@@ -241,27 +273,13 @@ object TableWriter {
     }
   }
 
-  /** The fingerprint the sidecar recorded at persist time — None for
-    * sidecars written before fingerprints existed (treated as stale:
-    * recompute is always correct).
-    */
-  private def recordedFingerprint(spark: SparkSession, path: String): Option[(Long, Long)] =
-    readDomainsJson(spark, path).flatMap { json =>
-      try {
-        val root = domainsMapper.readTree(json)
-        if (root != null && root.has("data_files") && root.has("data_bytes"))
-          Some((root.get("data_files").longValue(), root.get("data_bytes").longValue()))
-        else None
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
-
   /** Append a batch to an existing table and MERGE its statistics into
     * the sidecar without rescanning the old data — the reference's
     * incremental domain maintenance (domains updated batch by batch
     * during write, reference
     * org.knime.core.data.columnar/.../domain/DomainWritable.java:90-137)
-    * as an on-disk lifecycle: one batch-sized aggregation +
-    * [[Domains.merge]] (exact min/max/nulls/nominal; HLL/KLL sketch
+    * as an on-disk lifecycle: the batch's domains observed on its own
+    * write job + [[Domains.merge]] (exact min/max/nulls/nominal; HLL/KLL sketch
     * unions for distinct/quantiles — recompute-grade, see KTableSpec).
     * Falls back to a full recompute when the existing sidecar is absent,
     * schema-incompatible, or STALE — the sidecar records a data-file
@@ -280,7 +298,8 @@ object TableWriter {
       nominalCap: Int = Domains.DefaultNominalCap
   ): WriteResult = {
     val spark = df.sparkSession
-    val prior = readDomains(spark, path)
+    val sidecar = readSidecar(spark, path)
+    val prior = sidecar.flatMap(_.domains)
     if (prior.isEmpty &&
         !new org.apache.hadoop.fs.Path(path).getFileSystem(
           spark.sparkContext.hadoopConfiguration).exists(new org.apache.hadoop.fs.Path(path)))
@@ -293,10 +312,11 @@ object TableWriter {
     }
     // listed BEFORE this batch's append: equality with the recorded
     // fingerprint certifies the sidecar describes exactly the data on disk
-    val sidecarFresh = recordedFingerprint(spark, path)
+    val sidecarFresh = sidecar.flatMap(_.fingerprint)
       .contains(dataFingerprint(spark, path))
-    df.write.mode("append").parquet(path)
-    val (batchDomains, batchCount) = Domains.computeWithRowCount(df, nominalCap)
+    val (observed, domainsOf) = Domains.observe(df, nominalCap)
+    observed.write.mode("append").parquet(path)
+    val (batchDomains, batchCount) = domainsOf()
     val merged = prior match {
       // simpleString comparison: the sidecar round-trips types through
       // DDL, which forces nullable/containsNull to true — comparing live

@@ -608,6 +608,12 @@ object LinkGraph {
     * isolated nodes report `rep = id, component_size = 1`. Works for any
     * orderable id type (numeric, string). Bit-deterministic: min/star
     * operations are exact set transforms, no floats anywhere.
+    *
+    * `maxRounds` must be at least 1 (IllegalArgumentException otherwise):
+    * convergence is only detected after a round, so even an edgeless or
+    * already-star input runs one. A graph that needs more rounds than
+    * `maxRounds` fails with IllegalStateException rather than return a
+    * partial labeling.
     */
   def connectedComponents(nodes: DataFrame, idCol: String, edges: DataFrame,
       maxRounds: Int = 30): DataFrame = {
@@ -693,7 +699,8 @@ object LinkGraph {
     *
     * `priorLabels` is a previous output of this or [[connectedComponents]]
     * (`(idCol, rep, …)` — extra columns ignored); `nodes` is the FULL
-    * node set the output should cover (old ∪ new).
+    * node set the output should cover (old ∪ new). `maxRounds` carries
+    * [[connectedComponents]]' contract: at least 1.
     */
   def connectedComponentsIncremental(nodes: DataFrame, idCol: String,
       priorLabels: DataFrame, newEdges: DataFrame, maxRounds: Int = 30): DataFrame = {

@@ -493,16 +493,8 @@ class ArrowPartialSpec extends SparkSpec {
       Files.list(Paths.get(out)).toArray.map(_.toString).filter(_.endsWith(".arrow")).head
     }
     val statuses = dirs.map(f => (f, Files.size(Paths.get(f))))
-    val sc = spark.sparkContext
-    sc.setJobGroup("arrow_plan_jobs", "footer planning", interruptOnCancel = false)
-    val tasks =
-      try ArrowIpc.planCompleteTasks(spark, statuses, splitBytes = 4096)
-      finally sc.clearJobGroup()
-    def jobs() = sc.statusTracker.getJobIdsForGroup("arrow_plan_jobs")
-    val deadline = System.currentTimeMillis() + 5000
-    while (jobs().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(jobs().length == 1,
-      s"big-file footer planning must be ONE job - saw ${jobs().length}")
+    val (tasks, jobs) = countJobs(ArrowIpc.planCompleteTasks(spark, statuses, splitBytes = 4096))
+    assert(jobs == 1, s"big-file footer planning must be ONE job - saw $jobs")
     // every file fanned out, ranges cover in order
     dirs.foreach { f =>
       val ranges = tasks.collect { case (`f`, Some(r)) => r }

@@ -70,17 +70,10 @@ class DerivedStoreSpec extends SparkSpec {
       "no post-write re-read of the data dir") {
     val df = (1L to 7L).toDF("doc_id")
     val dir = tmp("ds_rows")
-    val sc = spark.sparkContext
-    sc.setJobGroup("ds_save_jobs", "derived-store save", interruptOnCancel = false)
-    try DerivedStore.save(df, dir, "fp-v1")
-    finally sc.clearJobGroup()
-    // the status tracker is fed by an async listener; poll briefly
-    def jobs() = sc.statusTracker.getJobIdsForGroup("ds_save_jobs")
-    val deadline = System.currentTimeMillis() + 5000
-    while (jobs().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(jobs().length == 1,
+    val (_, jobs) = countJobs(DerivedStore.save(df, dir, "fp-v1"))
+    assert(jobs == 1,
       s"save must run exactly the writing job (rows observed on it, not " +
-        s"re-counted after) - saw ${jobs().length} jobs")
+        s"re-counted after) - saw $jobs jobs")
     // the observed count certifies the real row count in the manifest
     val node = graft.sources.ArtifactJson.readFile(spark, s"$dir/_manifest.json")
     assert(node.get("rows").asLong() == 7L)

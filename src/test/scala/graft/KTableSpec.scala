@@ -186,6 +186,17 @@ class KTableSpec extends SparkSpec {
     assert(d.nominal.isEmpty) // dropped, reference drop-when-exceeded semantics
   }
 
+  test("nominal domain: sort_array order, dropped past the cap in a task or a merge, empty when all null") {
+    val df = Seq("b", "B", "a", "é", "Z", "", "ab", "a", "B").toDF("s").repartition(3)
+    val kept = Domains.compute(df, nominalCap = 7).head.nominal
+    assert(kept.contains(df.agg(sort_array(collect_set($"s"))).head().getSeq[String](0)))
+    // 7 distinct over 3 tasks: no task overflows a cap of 6, the merge does
+    assert(Domains.compute(df, nominalCap = 6).head.nominal.isEmpty)
+    assert(Domains.compute(df.coalesce(1), nominalCap = 1).head.nominal.isEmpty)
+    assert(Domains.compute(Seq(true, false, true).toDF("b"), nominalCap = 2).head.nominal.contains(Seq(false, true)))
+    assert(Domains.compute(Seq[Option[String]](None, None).toDF("s"), nominalCap = 0).head.nominal.contains(Seq()))
+  }
+
   test("domain merge equals recompute over the union (incremental update)") {
     val a = Seq((Some(1), Some("a")), (None, Some("b"))).toDF("n", "s")
     val b = Seq((Some(7), Some("c")), (Some(-2), None)).toDF("n", "s")
@@ -209,6 +220,19 @@ class KTableSpec extends SparkSpec {
     assert(math.abs(merged.approxDistinct - 900L) <= 27, s"estimate ${merged.approxDistinct}") // ±3%
     val recomputed = Domains.compute(a.unionByName(b), 10).head
     assert(math.abs(merged.approxDistinct - recomputed.approxDistinct) <= 27)
+  }
+
+  test("domain merge: double and timestamp sketches union to recompute-grade distinct counts") {
+    // overlapping halves: the max(a, b) fallback would report 600
+    def half(r: Range) = r.map(i => (i * 0.5, new java.sql.Timestamp(1700000000000L + i * 1000L))).toDF("d", "ts")
+    val (a, b) = (half(0 until 600), half(300 until 900))
+    val merged = Domains.merge(Domains.compute(a, 10), Domains.compute(b, 10), 10)
+    val recomputed = Domains.compute(a.unionByName(b), 10)
+    merged.zip(recomputed).foreach { case (m, r) =>
+      assert(m.distinctSketch.isDefined, s"${m.column} sketch")
+      assert(math.abs(m.approxDistinct - 900L) <= 27, s"${m.column} estimate ${m.approxDistinct}") // ±3%
+      assert(math.abs(m.approxDistinct - r.approxDistinct) <= 27, s"${m.column} vs recompute")
+    }
   }
 
   test("domain merge: KLL quantile sketches union with recompute-grade error") {

@@ -245,6 +245,13 @@ class LinkGraphSpec extends SparkSpec {
     assert(ex.getMessage.contains("maxRounds"), ex.getMessage)
   }
 
+  test("connectedComponents: maxRounds = 0 is rejected (at least one round)") {
+    val ex = intercept[IllegalArgumentException] {
+      LinkGraph.connectedComponents(nodes(1L, 2L), "id", edgesOf(1L -> 2L), maxRounds = 0)
+    }
+    assert(ex.getMessage.contains("maxRounds"), ex.getMessage)
+  }
+
   test("connectedComponents: matches clusterRepresentatives on a random graph") {
     val rnd = new scala.util.Random(11)
     val pairs = Seq.fill(80)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))

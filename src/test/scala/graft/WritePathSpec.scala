@@ -46,12 +46,10 @@ class WritePathSpec extends SparkSpec {
         m.nullCount == r.nullCount &&
         m.nominal.map(_.toSet) == r.nominal.map(_.toSet),
         s"${m.column}: merged $m vs recomputed $r")
-      // sketch-backed columns merge to recompute-grade estimates;
-      // non-sketchable types (double here) carry the documented
-      // max(a, b) lower bound
-      if (m.distinctSketch.isDefined)
-        assert(m.approxDistinct == r.approxDistinct, s"${m.column} distinct")
-      else assert(m.approxDistinct <= r.approxDistinct, s"${m.column} bound")
+      // every column here carries a sketch (the double `v` through its
+      // xxhash64), so distinct counts merge to the recompute's estimate
+      assert(m.distinctSketch.isDefined, s"${m.column} sketch")
+      assert(m.approxDistinct == r.approxDistinct, s"${m.column} distinct")
     }
     // the written sidecar round-trips structurally
     val (rc, back) = TableWriter.readDomains(spark, out).get
@@ -65,6 +63,66 @@ class WritePathSpec extends SparkSpec {
     // first write to an empty path goes through the plain write path
     val fresh = tmp("appendw2")
     assert(TableWriter.appendWrite(a, fresh).rowCount == 2)
+  }
+
+  test("write-time domains equal a recompute over the written table") {
+    val doubles = Seq(Double.NaN, 0.0, -0.0, -1.5, 2.25)
+    val df = (0 until 120).map { i =>
+      (i.toLong, s"lang${i % 3}", i % 7, (i % 11).toDouble, Seq(i.toDouble, -i / 2.0),
+        if (i % 5 == 0) None else Some(Seq(s"t${i % 4}", s"t${i % 6}")),
+        Option.empty[Int], Option.empty[String], doubles(i % doubles.length), i % 3 == 0,
+        s"u$i", s"c${i % 9}")
+    }.toDF("id", "lang", "len", "score", "nums", "tags", "none", "nostr", "d", "flag", "over", "under")
+      .select($"id", struct($"lang", $"len", struct($"score").as("inner")).as("meta"),
+        $"nums", $"tags", $"none", $"nostr", $"d", $"flag", $"over", $"under")
+      .repartition(3) // several tasks: the observed state merges on the driver
+    val out = tmp("observed")
+    val res = TableWriter.write(df, out)
+    val (recomputed, rows) = graft.table.Domains.computeWithRowCount(spark.read.parquet(out))
+    assert(res.rowCount == 120 && rows == 120)
+    assert(res.domains.map(_.column) == recomputed.map(_.column))
+    def same(a: Option[Any], b: Option[Any]): Boolean = (a, b) match {
+      case (Some(x: Double), Some(y: Double)) => x == y || (x.isNaN && y.isNaN)
+      case _                                  => a == b
+    }
+    res.domains.zip(recomputed).foreach { case (w, r) =>
+      val c = w.column
+      assert(w.dataType.simpleString == r.dataType.simpleString, c)
+      assert(same(w.min, r.min) && same(w.max, r.max), s"$c bounds: $w vs $r")
+      assert(w.nominal == r.nominal, s"$c nominal")
+      assert(w.nullCount == r.nullCount, s"$c nulls")
+      assert(w.approxDistinct == r.approxDistinct, s"$c distinct")
+      assert(w.distinctSketch.isDefined == r.distinctSketch.isDefined, s"$c sketch")
+      // KLL compaction is randomized: equal data, different bytes — compare
+      // what the sketch answers
+      assert(w.quantileSketch.isDefined == r.quantileSketch.isDefined, s"$c kll")
+      for (q <- Seq(0.0, 0.25, 0.5, 0.75, 1.0))
+        assert(same(w.quantile(q), r.quantile(q)), s"$c quantile $q")
+    }
+    val d = res.domains.map(x => x.column -> x).toMap
+    assert(d("over").nominal.isEmpty) // over the cap: dropped
+    assert(math.abs(d("over").approxDistinct - 120) <= 3)
+    assert(d("under").nominal.contains((0 until 9).map(i => s"c$i")))
+    assert(d("flag").nominal.contains(Seq(false, true)))
+    assert(d("nostr").nominal.contains(Seq.empty) && d("nostr").approxDistinct == 0)
+    assert(d("none").nullCount == 120 && d("none").approxDistinct == 0)
+    assert(d("none").min.isEmpty && d("none").quantile(0.5).isEmpty)
+    assert(d("d").max.exists(_.asInstanceOf[Double].isNaN) && d("d").min.contains(-1.5))
+    assert(d("nums").min.contains(-59.5) && d("nums").max.contains(119.0))
+    assert(d("meta.inner.score").max.contains(10.0) && d("meta.lang").nominal.contains(Seq("lang0", "lang1", "lang2")))
+
+    val empty = TableWriter.write(df.limit(0), tmp("observed_empty"))
+    assert(empty.rowCount == 0)
+    assert(empty.domains.find(_.column == "under").get.nominal.contains(Seq.empty))
+  }
+
+  test("appendWrite onto a table with a fresh sidecar runs one Spark job") {
+    val out = tmp("onejob")
+    TableWriter.write(Seq((1, "a", 1.5), (2, "b", -0.5)).toDF("k", "s", "v"), out)
+    val batch = Seq((7, "c", 99.0), (0, "a", 3.25)).toDF("k", "s", "v")
+    val (res, jobs) = countJobs(TableWriter.appendWrite(batch, out, checkRowIdUnique = false))
+    assert(res.rowCount == 4)
+    assert(jobs == 1, s"$jobs jobs: the domains must ride the write job")
   }
 
   test("appendWrite falls back to recompute when the sidecar is missing") {
